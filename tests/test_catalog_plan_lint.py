@@ -87,3 +87,46 @@ def test_html_extract_fuses_into_scan(spark):
     n_ex = len(re.findall(r"\bExchange\b", plan))
     assert n_ex <= 1, plan[:1500]
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+#: Executed-plan size bound for the crawl composites. A filter above
+#: the staged URL projection chain gets predicate-pushed through every
+#: step, substituting the whole canonicalization into each one; the
+#: plan then grows by two orders of magnitude. The eager checkpoint
+#: boundaries in w5/w6/x57 keep their plans at a few KB.
+_CRAWL_PLAN_BOUND = 16 * 1024
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["w5_crawl_frontier_e2e", "w6_crawl_loop_e2e", "x57_politeness_schedule"],
+)
+def test_crawl_plans_stay_flat(spark, name):
+    from trisk_datawrangle_spark.catalog import QUERIES
+
+    plan = _physical(QUERIES[name](spark, SF_DIR_SMALL))
+    assert len(plan) < _CRAWL_PLAN_BOUND, (name, len(plan))
+
+
+def test_crawl_plan_bound_catches_reinlining(spark):
+    """Positive control: the w5 frontier shape with the '' drop
+    placed directly above the resolve+canonicalize chain must exceed
+    the bound; the same drop below an eager checkpoint stays under."""
+    from pyspark.sql import functions as F
+
+    from trisk_datawrangle_spark.llm.urls import (
+        with_canonical_url,
+        with_resolved_url,
+    )
+
+    refs = spark.range(4).select(
+        F.lit("https://Host.Example.com/dir/page.html").alias("base"),
+        F.concat(F.lit("../q/"), F.col("id").cast("string")).alias("ref"),
+    )
+    canon = with_canonical_url(
+        with_resolved_url(refs, "base", "ref", "raw"), "raw", "canon"
+    )
+    keep = F.col("canon") != ""
+    assert len(_physical(canon.where(keep))) > _CRAWL_PLAN_BOUND
+    cut = canon.localCheckpoint(eager=True).where(keep)
+    assert len(_physical(cut)) < _CRAWL_PLAN_BOUND

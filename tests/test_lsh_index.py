@@ -217,22 +217,55 @@ def test_publish_index_swaps_and_rolls(spark, tmp_path_factory):
 
 
 def test_relation_memo_identity_and_invalidation(spark, tmp_path_factory):
-    """r12 memo contract: repeated probes reuse ONE relation handle
-    per (app, table dir); every mutator entry point purges it (the
-    publish-swap and append tests above prove the end-to-end
-    behavior — this pins the mechanism)."""
+    """Memo contract: repeated probes reuse ONE relation handle per
+    (app, index path, table); a mutator's invalidation purges the
+    relation AND model entries under its path, and only on the
+    path-separator boundary (``/idx/a`` leaves ``/idx/ab`` alone).
+    The publish-swap and append tests above prove the end-to-end
+    behavior — this pins the mechanism."""
     from trisk_datawrangle_spark.llm.lsh_index import (
         _invalidate_index_relations,
+        _memo_get,
+        _memo_put,
         _read_index_table,
     )
 
-    base = str(tmp_path_factory.mktemp("memo"))
-    spark.range(10).selectExpr("id", "id * 2 AS v").write.mode(
-        "overwrite"
-    ).parquet(f"{base}/bands")
-    a = _read_index_table(spark, base, "bands")
-    b = _read_index_table(spark, base, "bands")
-    assert a is b
-    _invalidate_index_relations(base)
-    c = _read_index_table(spark, base, "bands")
-    assert c is not a
+    root = str(tmp_path_factory.mktemp("memo"))
+    app = spark.sparkContext.applicationId
+    for p in (f"{root}/a", f"{root}/ab"):
+        spark.range(10).selectExpr("id", "id * 2 AS v").write.mode(
+            "overwrite"
+        ).parquet(f"{p}/bands")
+    a = _read_index_table(spark, f"{root}/a", "bands")
+    assert _read_index_table(spark, f"{root}/a", "bands") is a
+    ab = _read_index_table(spark, f"{root}/ab", "bands")
+    model, model_ab = ("cent", "books"), ("cent2", "books2")
+    _memo_put((app, f"{root}/a/v=1", "model"), model)
+    _memo_put((app, f"{root}/ab", "model"), model_ab)
+
+    _invalidate_index_relations(f"{root}/a")
+    assert _read_index_table(spark, f"{root}/a", "bands") is not a
+    assert _memo_get((app, f"{root}/a/v=1", "model")) is None
+    assert _read_index_table(spark, f"{root}/ab", "bands") is ab
+    assert _memo_get((app, f"{root}/ab", "model")) is model_ab
+
+
+def test_memo_evicts_least_recently_used():
+    """The memo is bounded LRU: an entry hit between inserts survives
+    a full capacity of cold inserts, the untouched one is evicted."""
+    from trisk_datawrangle_spark.llm.lsh_index import (
+        _MEMO_CAP,
+        _invalidate_index_relations,
+        _memo_get,
+        _memo_put,
+    )
+
+    hot, cold = ("app", "/lru/hot", "model"), ("app", "/lru/cold", "model")
+    _memo_put(hot, "h")
+    _memo_put(cold, "c")
+    for i in range(_MEMO_CAP):
+        assert _memo_get(hot) == "h"
+        _memo_put(("app", f"/lru/x{i}", "bands"), i)
+    assert _memo_get(hot) == "h"
+    assert _memo_get(cold) is None
+    _invalidate_index_relations("/lru")

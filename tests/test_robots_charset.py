@@ -542,3 +542,74 @@ class TestUndeclaredCjkSniff:
         # no candidate, not CJK-looking, falls through to cp1252
         short = ("page " + self.JA).encode("cp932")[:-1]
         assert sniff_charset("text/html", short) == "windows-1252"
+
+
+# ---- robots_verdict: the Spark-side gate over a frontier ----------- #
+
+
+def _verdicts(spark, rules, urls, keys=("u",)):
+    """robots_verdict over tiny in-memory frames: ``rules`` as
+    (h, verb, pattern) rows, ``urls`` as (u, h, path) rows — or
+    (doc, idx, h, path) when ``keys`` has two names."""
+    from trisk_datawrangle_spark.llm.robots import robots_verdict
+
+    rules_df = spark.createDataFrame(
+        [(h, v, p, len(p), rule_regex(p)) for h, v, p in rules],
+        "h long, verb string, pattern string, plen int, rx string",
+    )
+    cols = ", ".join(f"{k} long" for k in keys)
+    frontier = spark.createDataFrame(urls, f"{cols}, h long, path string")
+    out = robots_verdict(frontier, rules_df, list(keys))
+    assert out.columns == frontier.columns + ["allowed", "rule"]
+    rows = out.collect()
+    assert len(rows) == len(urls)  # one row per frontier URL
+    return {
+        tuple(r[k] for k in keys): (r["allowed"], r["rule"]) for r in rows
+    }
+
+
+def test_robots_verdict_longer_rule_wins(spark):
+    rules = [(1, "allow", "/a"), (1, "disallow", "/a/b")]
+    got = _verdicts(spark, rules, [(1, 1, "/a/b/c"), (2, 1, "/a/x")])
+    assert got == {(1,): (False, "/a/b"), (2,): (True, "/a")}
+
+
+def test_robots_verdict_allow_wins_equal_length_tie(spark):
+    rules = [(1, "disallow", "/a*"), (1, "allow", "/a/")]
+    got = _verdicts(spark, rules, [(1, 1, "/a/x")])
+    assert got == {(1,): (True, "/a/")}
+
+
+def test_robots_verdict_anchored_allow_beats_shorter_disallow(spark):
+    rules = [(1, "allow", "/p/2/ok$"), (1, "disallow", "/p/2*")]
+    got = _verdicts(
+        spark, rules, [(1, 1, "/p/2/ok"), (2, 1, "/p/2/ok/more")]
+    )
+    assert got == {(1,): (True, "/p/2/ok$"), (2,): (False, "/p/2*")}
+
+
+def test_robots_verdict_no_match_is_allowed_with_empty_rule(spark):
+    rules = [(1, "disallow", "/q/")]
+    # a path no rule matches, and a host with no rules at all
+    got = _verdicts(spark, rules, [(1, 1, "/p/x"), (2, 9, "/q/x")])
+    assert got == {(1,): (True, ""), (2,): (True, "")}
+
+
+def test_robots_verdict_two_keys_do_not_fan_out(spark):
+    """The x51 shape: several URLs per doc keyed by (doc, idx), each
+    matching several rules — one output row per frontier row."""
+    rules = [
+        (1, "disallow", "/q/"),
+        (1, "allow", "/q/open"),
+        (1, "disallow", "/q*"),
+    ]
+    urls = [
+        (d, i, 1, p)
+        for d in range(3)
+        for i, p in enumerate(["/q/open1", "/q/x", "/r"])
+    ]
+    got = _verdicts(spark, rules, urls, keys=("doc", "idx"))
+    for d in range(3):
+        assert got[(d, 0)] == (True, "/q/open")
+        assert got[(d, 1)] == (False, "/q/")
+        assert got[(d, 2)] == (True, "")

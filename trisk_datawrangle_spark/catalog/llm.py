@@ -50,6 +50,12 @@ from trisk_datawrangle_spark.llm.multimodal import (
     resize_media,
     with_binary_payload,
 )
+from trisk_datawrangle_spark.llm.politeness import (
+    DEFAULT_CRAWL_DELAY,
+    politeness_schedule,
+    recrawl_staleness,
+)
+from trisk_datawrangle_spark.llm.robots import robots_verdict
 from trisk_datawrangle_spark.sources.readers import fan_out_scan, load_tables
 
 QUERIES: dict = {}
@@ -5857,6 +5863,23 @@ def _robots_fixture_rules(spark):
     )
 
 
+def _with_host_path(frontier: DataFrame) -> DataFrame:
+    """``frontier`` plus the fixture host number ``h`` (the N of a
+    ``hostN.example.com`` canonical URL, the rules and meta dimensions'
+    key) and the URL ``path`` the robots verdict matches. A canon the
+    host pattern misses gets a NULL ``h``: ``nullif`` keeps its ''
+    off the bigint cast, which ANSI mode rejects."""
+    canon = F.col("canon")
+    return frontier.select(
+        "*",
+        F.nullif(
+            F.regexp_extract(canon, "^[a-z]+://host([0-9]+)\\.", 1),
+            F.lit(""),
+        ).cast("long").alias("h"),
+        F.regexp_extract(canon, "^[a-z]+://[^/]+(/.*)", 1).alias("path"),
+    )
+
+
 @q(
     "x51_robots_filter",
     """
@@ -5928,10 +5951,11 @@ def x51(spark, sf_dir):
     the rest fall to ``*`` — and emits a per-host rule table with the
     RFC's octet-length specificity and the wildcard/anchor patterns
     compiled to anchored regexes. Frontier URLs (3-4 per doc) then
-    match JVM-side: broadcast hash join on host, per-row
-    ``regexp_like``, and a map-side-combinable max_by(struct) argmax
-    for longest-match-allow-wins — no window sort, no Python in the
-    match path. The oracle regenerates the RULES from the fixture
+    pass llm/robots.py ``robots_verdict`` keyed by (doc_id, url_idx)
+    — broadcast hash join on host, per-row ``regexp_like``, and a
+    map-side-combinable max(struct) argmax for
+    longest-match-allow-wins: no window sort, no Python in the match
+    path. The oracle regenerates the RULES from the fixture
     arithmetic (not by parsing) and replays the matching with its own
     regex translation + row_number argmax, so a parser bug (group
     selection, decoy obeyed, case sensitivity, empty-path rule kept),
@@ -5965,30 +5989,7 @@ def x51(spark, sf_dir):
             .otherwise(F.slice(paths, 1, 3))
         ).alias("url_idx", "path"),
     )
-    matched = frontier.join(F.broadcast(rules), "h").where(
-        F.expr("regexp_like(path, rx)")
-    )
-    best = (
-        matched.groupBy("doc_id", "url_idx")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("plen"),
-                    (F.col("verb") == "allow").cast("int")
-                    .alias("verb_pref"),
-                    F.col("pattern"),
-                    F.col("verb"),
-                )
-            ).alias("w")
-        )
-        .select(
-            "doc_id",
-            "url_idx",
-            F.col("w.verb").alias("verb"),
-            F.col("w.pattern").alias("pattern"),
-        )
-    )
-    return frontier.join(best, ["doc_id", "url_idx"], "left").select(
+    return robots_verdict(frontier, rules, ["doc_id", "url_idx"]).select(
         "doc_id",
         F.col("url_idx").cast("int").alias("url_idx"),
         F.concat(
@@ -5996,9 +5997,8 @@ def x51(spark, sf_dir):
             F.lit(".example.com"),
         ).alias("host"),
         "path",
-        (F.coalesce(F.col("verb"), F.lit("allow")) == "allow")
-        .alias("allowed"),
-        F.coalesce(F.col("pattern"), F.lit("")).alias("rule"),
+        "allowed",
+        "rule",
     )
 
 
@@ -6882,8 +6882,10 @@ def x59(spark, sf_dir):
     ranking above absent-lastmod (30) and date-diff backlog;
     ``needs_fetch`` fires when the log has no row, the sitemap
     claims a change after the last fetch, or lastmod is absent (the
-    silent-staleness bug class). CASE arms guard the substring→int
-    casts so empty/NULL never reaches ANSI cast, in BOTH engines.
+    silent-staleness bug class). The flag and the score are
+    llm/politeness.py ``recrawl_staleness``, whose CASE arms guard
+    the substring→int casts so empty/NULL never reaches ANSI cast
+    (the oracle guards them the same way).
     The oracle wraps the full shared x54 SQL and replays BOTH
     channels arithmetically — a lost merge (stale date surviving
     the upsert), a dropped log row, a join fanout, or a prior that
@@ -6961,15 +6963,7 @@ def x59(spark, sf_dir):
         lf = F.when(hk % 2 == 1, arith_date).otherwise(
             F.col("__lf_log")
         )
-        lm = F.col("lastmod")
-        mdiff = (
-            F.substring(lm, 6, 2).cast("int")
-            - F.substring(lf, 6, 2).cast("int")
-        )
-        ddiff = (
-            F.substring(lm, 9, 2).cast("int")
-            - F.substring(lf, 9, 2).cast("int")
-        )
+        needs_fetch, staleness = recrawl_staleness("lastmod", lf)
         out = joined.select(
             "doc_id",
             "url_idx",
@@ -6977,15 +6971,8 @@ def x59(spark, sf_dir):
             "lastmod",
             lf.alias("last_fetch"),
             (hk % 2 == 0).alias("from_log"),
-            (lf.isNull() | (lm == "") | (lm > lf)).alias(
-                "needs_fetch"
-            ),
-            F.when(lf.isNull(), F.lit(60))
-            .when(lm == "", F.lit(30))
-            .when(lm > lf, mdiff * 30 + ddiff)
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("staleness"),
+            needs_fetch.alias("needs_fetch"),
+            staleness.alias("staleness"),
         )
         out = out.localCheckpoint()  # materialize before cleanup
     finally:
@@ -8060,7 +8047,8 @@ u AS (
 f2 AS (
     SELECT canon, COUNT(*) AS n_discoveries,
         MAX(via) = 1 AS via_redirect,
-        CAST(regexp_extract(canon, '^[a-z]+://host([0-9]+)', 1)
+        CAST(NULLIF(regexp_extract(canon,
+                                  '^[a-z]+://host([0-9]+)\\.', 1), '')
              AS BIGINT) AS h,
         regexp_extract(canon, '^[a-z]+://[^/]+(/.*)', 1) AS path
     FROM u GROUP BY canon
@@ -8204,9 +8192,6 @@ def w6(spark, sf_dir):
     scenarios idiom — each feeds two branches, and the uncut tree
     stacks the canonical chain under both gates and blows the
     serialized task size)."""
-    from trisk_datawrangle_spark.llm.politeness import (
-        politeness_schedule,
-    )
     from trisk_datawrangle_spark.llm.urls import (
         with_canonical_url,
         with_resolved_url,
@@ -8241,47 +8226,6 @@ def w6(spark, sf_dir):
         "raw", "canon",
     ).select("canon")
 
-    def gate(frontier):
-        """h/path derivation + the broadcast robots argmax — the
-        SAME longest-match-allow-wins shape as w5, applied to both
-        frontier rounds (one helper, the gates cannot drift)."""
-        fr = frontier.select(
-            "*",
-            F.regexp_extract(
-                F.col("canon"), "^[a-z]+://host([0-9]+)\\.", 1
-            ).cast("long").alias("h"),
-            F.regexp_extract(
-                F.col("canon"), "^[a-z]+://[^/]+(/.*)", 1
-            ).alias("path"),
-        )
-        matched = fr.join(F.broadcast(rules), "h").where(
-            F.expr("regexp_like(path, rx)")
-        )
-        best = (
-            matched.groupBy("canon")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("plen"),
-                        (F.col("verb") == "allow").cast("int")
-                        .alias("verb_pref"),
-                        F.col("pattern"),
-                        F.col("verb"),
-                    )
-                ).alias("w")
-            )
-            .select("canon", F.col("w.verb").alias("verb"))
-        )
-        return (
-            fr.join(best, ["canon"], "left")
-            .withColumn(
-                "allowed",
-                F.coalesce(F.col("verb"), F.lit("allow"))
-                == "allow",
-            )
-            .drop("verb", "path")
-        )
-
     # round 1: dedup FIRST (the one corpus-sized exchange), then a
     # lineage cut — everything downstream is frontier-sized, and the
     # plan tree the final stages serialize stays flat (the w0
@@ -8291,7 +8235,11 @@ def w6(spark, sf_dir):
     f1 = disc.groupBy("canon").agg(
         F.count(F.lit(1)).alias("n1")
     ).localCheckpoint(eager=False)
-    fetch = gate(f1).where(F.col("allowed")).select("canon")
+    fetch = (
+        robots_verdict(_with_host_path(f1), rules, ["canon"])
+        .where(F.col("allowed"))
+        .select("canon")
+    )
     x = F.regexp_extract(
         F.col("canon"), "([0-9]+)$", 1
     ).cast("long")
@@ -8346,12 +8294,13 @@ def w6(spark, sf_dir):
     )
     # second lineage cut: g2 feeds the schedule window AND the
     # final join — flat on both branches
-    g2 = gate(f2).localCheckpoint(eager=False)
+    g2 = (
+        robots_verdict(_with_host_path(f2), rules, ["canon"])
+        .drop("path", "rule")
+        .localCheckpoint(eager=False)
+    )
     sched = politeness_schedule(
-        g2.where(F.col("allowed"))
-        .join(F.broadcast(delays), ["h"], "left")
-        .select("h", "canon", "crawl_delay"),
-        default_delay=_DEFAULT_CRAWL_DELAY,
+        g2.where(F.col("allowed")).join(F.broadcast(delays), ["h"], "left")
     ).select("canon", "slot", "eta_sec")
     # recrawl arithmetic (the x59 contract) keyed on the trailing
     # integer — redirect targets included, so a target that reached
@@ -8371,21 +8320,11 @@ def w6(spark, sf_dir):
         F.lit("-"),
         F.lpad(((k + 13) % 28 + 1).cast("string"), 2, "0"),
     )
-    joined = (
-        g2.join(sched, ["canon"], "left")
-        .withColumn("lastmod", F.when(F.col("allowed"), lastmod))
-        .withColumn(
-            "last_fetch", F.when(F.col("allowed"), last_fetch)
-        )
-    )
-    lm, lf = F.col("lastmod"), F.col("last_fetch")
-    mdiff = (
-        F.substring(lm, 6, 2).cast("int")
-        - F.substring(lf, 6, 2).cast("int")
-    )
-    ddiff = (
-        F.substring(lm, 9, 2).cast("int")
-        - F.substring(lf, 9, 2).cast("int")
+    # disallowed rows are never fetched, so they stay NULL
+    needs_fetch, staleness = recrawl_staleness("lastmod", "last_fetch")
+    allowed = F.col("allowed")
+    joined = g2.join(sched, ["canon"], "left").select(
+        "*", lastmod.alias("lastmod"), last_fetch.alias("last_fetch")
     )
     return joined.select(
         "canon",
@@ -8395,14 +8334,8 @@ def w6(spark, sf_dir):
         F.col("h").cast("long").alias("h"),
         F.col("slot").cast("int").alias("slot"),
         F.col("eta_sec").cast("double").alias("eta_sec"),
-        ((lm == "") | (lm > lf)).alias("needs_fetch"),
-        F.when(lm == "", F.lit(30))
-        .when(lm > lf, mdiff * 30 + ddiff)
-        .otherwise(
-            F.when(F.col("allowed"), F.lit(0))
-        )
-        .cast("int")
-        .alias("staleness"),
+        F.when(allowed, needs_fetch).alias("needs_fetch"),
+        F.when(allowed, staleness).alias("staleness"),
     )
 
 
@@ -8547,7 +8480,8 @@ dedup AS (
 ),
 verdicts AS (
     SELECT canon, n_discoveries,
-        CAST(regexp_extract(canon, '^[a-z]+://host([0-9]+)', 1)
+        CAST(NULLIF(regexp_extract(canon,
+                                  '^[a-z]+://host([0-9]+)\\.', 1), '')
              AS BIGINT) AS h,
         regexp_extract(canon, '^[a-z]+://[^/]+(/.*)', 1) AS path
     FROM dedup
@@ -8702,90 +8636,54 @@ def w5(spark, sf_dir):
         .withColumn("ref", xml_unescape_expr(F.col("rawref")))
     )
     resolved = with_resolved_url(links, "base", "ref", "raw")
-    # the non-http(s) drop (mailto arm) moved BELOW the checkpoint
-    # (r13): a .where(canon != '') here gets predicate-pushed through
-    # every staged projection, substituting the alias at each step —
-    # the executed plan blew up from 5 KB to 309 KB with NINETEEN
-    # inlined copies of the percent fold, re-running the whole
-    # canonicalization per reference and costing w5 most of its
-    # runtime. The '' URLs form one group in the dedup aggregate and
-    # are dropped right after the plan-truncation boundary — same
-    # output rows.
+    # the non-http(s) drop (mailto arm) sits BELOW the checkpoint: a
+    # .where(canon != '') here gets predicate-pushed through every
+    # staged projection, substituting the alias at each step — the
+    # executed plan blew up from 5 KB to 309 KB with NINETEEN inlined
+    # copies of the percent fold, re-running the whole
+    # canonicalization per reference. The '' URLs form one group in
+    # the dedup aggregate and are dropped right after the
+    # plan-truncation boundary — same output rows.
     canon = with_canonical_url(resolved, "raw", "canon")
-    # the robots -> sitemap discovery edge (verdict r9 #5): every
-    # host's advertised Sitemap URLs (the x55 meta dimension, parsed
-    # from the same robots bodies as the rules) enter the frontier
-    # as first-class discoveries — the scheduler fetches sitemap
-    # files through the same dedup + politeness gate as page URLs.
-    # 23-29 rows: a dimension-sized union, invisible at scale.
+    # the robots -> sitemap discovery edge: every host's advertised
+    # Sitemap URLs (the x55 meta dimension, parsed from the same
+    # robots bodies as the rules) enter the frontier as first-class
+    # discoveries — the scheduler fetches sitemap files through the
+    # same dedup + politeness gate as page URLs. 23-29 rows: a
+    # dimension-sized union, invisible at scale.
     sm_discoveries = with_canonical_url(
         _robots_fixture_meta(spark), "sitemap_raw", "canon"
     ).select("canon")
     canon = canon.select("canon").unionByName(sm_discoveries)
     # dedup on the canonical key ALONE: h and path are pure
     # functions of canon, so deriving them AFTER the aggregate lets
-    # the argmax groupBy and the final canon-keyed join both reuse
-    # this exchange's HashPartitioning(canon) — grouping by
+    # the verdict's groupBy and its canon-keyed join both reuse this
+    # exchange's HashPartitioning(canon) — grouping by
     # (canon, h, path) forced two extra exchanges downstream
-    frontier = (
-        canon.groupBy("canon")
-        .agg(F.count(F.lit(1)).alias("n_discoveries"))
-        .select(
-            "canon",
-            "n_discoveries",
-            # nullif: the '' group (mailto arm, dropped right after
-            # the checkpoint below) extracts '' here, which an ANSI
-            # cast to bigint rejects; real canons always match
-            F.nullif(
-                F.regexp_extract(
-                    F.col("canon"), "^[a-z]+://host([0-9]+)\\.", 1
-                ),
-                F.lit(""),
-            ).cast("long").alias("h"),
-            F.regexp_extract(
-                F.col("canon"), "^[a-z]+://[^/]+(/.*)", 1
-            ).alias("path"),
+    frontier = _with_host_path(
+        canon.groupBy("canon").agg(
+            F.count(F.lit(1)).alias("n_discoveries")
         )
     )
     # stage boundary: frontier feeds BOTH the rules-match branch and
-    # the final left join — uncached, the whole
+    # the verdict's left join — uncached, the whole
     # discover→resolve→canonicalize→dedup subtree re-executes per
-    # branch (measured 25 s vs 7 s at sf0.1). r13: EAGER
-    # localCheckpoint instead of cache (the q9 idiom) — .cache()
+    # branch (measured 25 s vs 7 s at sf0.1). An EAGER
+    # localCheckpoint rather than cache (the q9 idiom): .cache()
     # still PLANS the giant URL-expression subtree into every
-    # consumer branch, so each AQE stage materialization re-optimizes
-    # and re-codegens those regex trees (statusTracker: 7 jobs /
-    # 325 tasks per pass); the checkpoint truncates the plan to the
-    # tiny frontier RDD. The '' drop lands HERE, where the predicate
-    # has no lineage left to push into (see the note at the canon
-    # stage).
+    # consumer branch, so each AQE stage materialization
+    # re-optimizes and re-codegens those regex trees; the checkpoint
+    # truncates the plan to the tiny frontier RDD. The '' drop lands
+    # HERE, where the predicate has no lineage left to push into
+    # (see the note at the canon stage). It covers both sides of the
+    # robots -> sitemap union: a sitemap URL that canonicalizes to ''
+    # (non-http scheme, non-ASCII host) is dropped like a mailto:
+    # link.
     frontier = frontier.localCheckpoint(eager=True).where(
         F.col("canon") != ""
     )
-    matched = frontier.join(F.broadcast(rules), "h").where(
-        F.expr("regexp_like(path, rx)")
-    )
-    best = (
-        matched.groupBy("canon")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("plen"),
-                    (F.col("verb") == "allow").cast("int")
-                    .alias("verb_pref"),
-                    F.col("pattern"),
-                    F.col("verb"),
-                )
-            ).alias("w")
-        )
-        .select(
-            "canon",
-            F.col("w.verb").alias("verb"),
-            F.col("w.pattern").alias("pattern"),
-        )
-    )
     return (
-        frontier.join(best, ["canon"], "left")
+        robots_verdict(frontier, rules, ["canon"])
         # per-host politeness budget: another broadcast dimension on
         # the same h key — no new frontier exchange
         .join(F.broadcast(delays), ["h"], "left")
@@ -8793,19 +8691,11 @@ def w5(spark, sf_dir):
             "canon",
             F.col("n_discoveries").cast("long")
             .alias("n_discoveries"),
-            (F.coalesce(F.col("verb"), F.lit("allow")) == "allow")
-            .alias("allowed"),
-            F.coalesce(F.col("pattern"), F.lit("")).alias("rule"),
+            "allowed",
+            "rule",
             F.col("crawl_delay").cast("double").alias("crawl_delay"),
         )
     )
-
-
-#: Politeness default when a host publishes NO Crawl-delay: one
-#: fetch per second — the conservative industry convention. Pinned
-#: HERE (not inside the window arithmetic) so a NULL delay can never
-#: propagate NULL etas into a real frontier (r10 verdict Wrong #2).
-_DEFAULT_CRAWL_DELAY = 1.0
 
 
 @q(
@@ -8814,8 +8704,9 @@ _DEFAULT_CRAWL_DELAY = 1.0
 WITH base AS ({_W5_SQL}),
 allowed AS (
     SELECT canon,
-        COALESCE(crawl_delay, {_DEFAULT_CRAWL_DELAY}) AS crawl_delay,
-        CAST(regexp_extract(canon, '^[a-z]+://host([0-9]+)', 1)
+        COALESCE(crawl_delay, {DEFAULT_CRAWL_DELAY}) AS crawl_delay,
+        CAST(NULLIF(regexp_extract(canon,
+                                  '^[a-z]+://host([0-9]+)\\.', 1), '')
              AS BIGINT) AS h
     FROM base WHERE allowed
 )
@@ -8838,49 +8729,28 @@ def x57(spark, sf_dir):
     ``eta_sec = (slot-1) * crawl_delay``: the earliest time the
     fetcher may issue each URL relative to the host's first fetch.
     Hosts publishing NO Crawl-delay (fixture hosts 5/16 — the common
-    real-world case) take the explicit
-    :data:`_DEFAULT_CRAWL_DELAY` via coalesce in BOTH engines, so a
-    NULL budget can never propagate NULL etas (r10 verdict Wrong
-    #2). Disallowed URLs never enter the plan. The oracle wraps the FULL
-    w5 SQL (shared constant — the fixtures cannot drift) with the
-    same window arithmetic, so a verdict flip, a lost delay, or an
-    unstable slot order flips the hash. Scale shape: ONE window per
-    host over the already-deduped frontier — per-host sequential
+    real-world case) take the explicit llm/politeness.py
+    ``DEFAULT_CRAWL_DELAY`` via coalesce in BOTH engines, so a NULL
+    budget can never propagate NULL etas. Disallowed URLs never enter
+    the plan. The schedule is llm/politeness.py
+    ``politeness_schedule`` with no big hosts: ONE window per host
+    over the already-deduped frontier — per-host sequential
     scheduling is inherently per-host ordered, so a hash-partitioned
-    window on h is the minimal plan; a production scheduler shards a
-    mega-host by path prefix before this window, which composes (the
-    window key just gains the shard column) — factored as
-    llm/politeness.py politeness_schedule(big_hosts=..., n_shards=..)
-    and MEASURED at 15M rows/50% hot-share in
-    scripts/bench_politeness_skew.py (BENCH_SKEW_r11, flat-vs-skew
-    table in BASELINE.md)."""
-    base = w5(spark, sf_dir).where(F.col("allowed"))
-    h = F.regexp_extract(
-        F.col("canon"), "^[a-z]+://host([0-9]+)", 1
-    ).cast("long")
-    scoped = base.select(
-        "canon",
-        h.alias("h"),
-        # a host with no published Crawl-delay gets the explicit
-        # default — NULL must never reach the eta arithmetic
-        F.coalesce(
-            F.col("crawl_delay"), F.lit(_DEFAULT_CRAWL_DELAY)
-        ).alias("crawl_delay"),
-    )
-    win = Window.partitionBy("h").orderBy("canon")
-    rn = F.row_number().over(win)
-    return scoped.select(
-        "canon",
-        "h",
-        rn.cast("int").alias("slot"),
-        ((rn - F.lit(1)) * F.col("crawl_delay"))
-        .cast("double").alias("eta_sec"),
+    window on h is the minimal plan (x58 adds the mega-host shard
+    column, measured at 15M rows/50% hot-share in
+    scripts/bench_politeness_skew.py, BENCH_SKEW_r11). The oracle
+    wraps the FULL w5 SQL (shared constant — the fixtures cannot
+    drift) with the same window arithmetic, so a verdict flip, a
+    lost delay, or an unstable slot order flips the hash."""
+    allowed = _with_host_path(w5(spark, sf_dir).where(F.col("allowed")))
+    return politeness_schedule(allowed).select(
+        "canon", "h", "slot", "eta_sec"
     )
 
 
 @q(
     "x58_politeness_sharded",
-    """
+    f"""
 WITH frontier AS (
     SELECT
         CASE WHEN doc_id % 2 = 0 THEN 0 ELSE doc_id % 23 END AS h,
@@ -8898,7 +8768,7 @@ WITH frontier AS (
 ),
 sharded AS (
     SELECT h, canon,
-        COALESCE(crawl_delay, 1.0) AS delay,
+        COALESCE(crawl_delay, {DEFAULT_CRAWL_DELAY}) AS delay,
         CASE WHEN h = 0
              THEN CAST(regexp_extract(canon, '/p([0-9]+)/', 1)
                        AS INTEGER) % 4
@@ -8927,8 +8797,8 @@ def x58(spark, sf_dir):
     the flat x57 plan (the composition invariant, asserted in
     tests/test_politeness.py and gate-checked in the 15M-row skew
     bench). Hot-host delays are NULL by construction (h=0 is a
-    no-delay host), so the explicit 1.0 s default is load-bearing on
-    the hot path, not decorative. The oracle replays the frontier
+    no-delay host), so the ``DEFAULT_CRAWL_DELAY`` fallback is
+    load-bearing on the hot path, not decorative. The oracle replays the frontier
     arithmetic, the shard derivation, and the per-(host, shard)
     window, so a wrong shard, a NULL eta, a slot gap, or an unstable
     order flips the hash. Scale shape: one window over the deduped
@@ -8936,10 +8806,6 @@ def x58(spark, sf_dir):
     50% hot-share: flat pays 4.62x under skew, 16 shards recover to
     1.49x, uniform corpora pay ~nothing (BENCH_SKEW_r11.json,
     BASELINE.md r11)."""
-    from trisk_datawrangle_spark.llm.politeness import (
-        politeness_schedule,
-    )
-
     d = _docs(spark, sf_dir).select("doc_id")
     did = F.col("doc_id")
     h = F.when(did % 2 == 0, F.lit(0)).otherwise(did % 23)
@@ -8965,6 +8831,5 @@ def x58(spark, sf_dir):
         frontier,
         big_hosts=[0],
         n_shards=4,
-        default_delay=1.0,
         shard_expr=shard,
     ).select("h", "shard", "canon", "slot", "eta_sec")

@@ -43,6 +43,7 @@ run-from-scratch shape.
 from __future__ import annotations
 
 import json
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -119,58 +120,56 @@ def _check_id_col(meta: dict, id_col: str, op: str) -> None:
         )
 
 
-#: Per-process memo of index-table RELATION handles keyed by
-#: (applicationId, table dir) — r12, the load_tables pattern: the
-#: DataFrame handle holds only the file index + schema (driver-side
-#: metadata, ~0.2-0.3 s to rebuild for the bands table's
-#: bands × n_shards leaf dirs), re-paid by every probe without it;
-#: every ACTION on the memoized frame still reads the parquet
-#: files. Index tables are mutable in place via the append path
-#: (merge_by_key rewrites touched partitions), so BOTH mutators
-#: (write_lsh_index, lsh_index_append) invalidate their path's
-#: entries; a retrain-and-swap publishes a NEW version dir and
-#: never hits a stale handle. Cross-process appends remain governed
-#: by the single-writer lifecycle contract, same as before.
-_RELATION_MEMO: dict = {}
+#: Per-process memo of serving-path reads keyed by (applicationId,
+#: index path, kind): ``kind`` is a table name for a relation handle
+#: (the DataFrame holds only the file index + schema, ~0.2-0.3 s of
+#: driver-side metadata to rebuild for the bands table; every ACTION
+#: still reads the parquet files) or ``"model"`` for pq_index's
+#: frozen centroid/codebook arrays of one RESOLVED version path.
+#: Bounded LRU: a hit moves its entry to the end and an insert past
+#: ``_MEMO_CAP`` evicts from the front, so a hot serving entry
+#: outlives cold ones in a long-lived process probing many paths.
+#: Index tables are mutable in place via the append path, so every
+#: mutator (write, append, publish swap) calls
+#: :func:`_invalidate_index_relations`; a retrain-and-swap publishes
+#: a NEW version dir and never hits a stale entry. Cross-process
+#: appends remain governed by the single-writer lifecycle contract.
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_CAP = 64
+
+
+def _memo_get(key: tuple):
+    hit = _MEMO.get(key)
+    if hit is not None:
+        _MEMO.move_to_end(key)
+    return hit
+
+
+def _memo_put(key: tuple, value):
+    _MEMO[key] = value
+    _MEMO.move_to_end(key)
+    while len(_MEMO) > _MEMO_CAP:
+        _MEMO.popitem(last=False)
+    return value
 
 
 def _read_index_table(spark: SparkSession, path: str, table: str):
-    key = (spark.sparkContext.applicationId, f"{path}/{table}")
-    df = _RELATION_MEMO.get(key)
+    key = (spark.sparkContext.applicationId, path, table)
+    df = _memo_get(key)
     if df is None:
-        df = spark.read.parquet(f"{path}/{table}")
-        # bound the memo (r13, advice item): a long-lived process
-        # probing many distinct index paths must not grow it without
-        # limit — evict oldest-first (metadata handles, cheap to
-        # rebuild on a later re-probe)
-        while len(_RELATION_MEMO) >= 64:
-            del _RELATION_MEMO[next(iter(_RELATION_MEMO))]
-        _RELATION_MEMO[key] = df
+        df = _memo_put(key, spark.read.parquet(f"{path}/{table}"))
     return df
 
 
-#: Extra per-module invalidators (e.g. pq_index's model memo)
-#: registered at import time — avoids a circular import while
-#: keeping ONE invalidation entry point for every index mutator.
-_INVALIDATION_HOOKS: list = []
-
-
 def _invalidate_index_relations(path: str) -> None:
-    """Drop memoized handles under ``path`` (called by every mutator
-    of a serving location — write, append, publish swap — so a
-    same-process probe after the mutation sees the new file set)."""
-    # path-separator boundary (r13, advice item): mutating /idx/a
-    # must not purge /idx/ab (over-invalidation was safe but
-    # surprising). The memo keys are {path}/{table}, so a mutated dir
-    # matches only via the '/' boundary or exact equality.
+    """Drop every memo entry (relations and models) at or under
+    ``path`` — called by every mutator of a serving location, so a
+    same-process probe after the mutation sees the new file set.
+    The match respects the path-separator boundary: mutating
+    ``/idx/a`` leaves ``/idx/ab`` alone."""
     p = path.rstrip("/")
-    stale = [
-        k for k in _RELATION_MEMO if k[1] == p or k[1].startswith(p + "/")
-    ]
-    for k in stale:
-        del _RELATION_MEMO[k]
-    for hook in _INVALIDATION_HOOKS:
-        hook(path)
+    for k in [k for k in _MEMO if k[1] == p or k[1].startswith(p + "/")]:
+        del _MEMO[k]
 
 
 def _index_frames(

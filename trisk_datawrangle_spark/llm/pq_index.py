@@ -33,8 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.llm.lsh_index import (
-    _INVALIDATION_HOOKS,
     _invalidate_index_relations,
+    _memo_get,
+    _memo_put,
     _read_index_table,
     _write_meta,
     read_index_meta,
@@ -117,35 +118,6 @@ def write_ivf_pq_index(
     _invalidate_index_relations(path)
 
 
-#: Per-process memo of loaded PQ models keyed by (applicationId,
-#: RESOLVED version path) — r12. A published index version is
-#: immutable by the lifecycle contract (publish_index_versioned
-#: creates a fresh v=N and atomically flips CURRENT; versions are
-#: never edited in place), so the KB-sized centroid/codebook
-#: ndarrays for a given resolved path can live for the process: a
-#: serving deployment holds its model in memory and re-reads only
-#: the CURRENT pointer per request. The pointer resolve stays
-#: per-call (resolve_index_path below), so a retrain-and-swap is
-#: picked up on the next probe — it lands on a NEW resolved path
-#: and misses the memo.
-_MODEL_MEMO: dict = {}
-
-
-def _purge_model_memo(path: str) -> None:
-    # path-separator boundary (r13, advice item): mutating /idx/a
-    # must not purge /idx/ab
-    p = path.rstrip("/")
-    for key in [
-        k for k in _MODEL_MEMO if k[1] == p or k[1].startswith(p + "/")
-    ]:
-        del _MODEL_MEMO[key]
-
-
-# every index mutator (write/append/publish swap) reaches the model
-# memo through the shared invalidation entry point
-_INVALIDATION_HOOKS.append(_purge_model_memo)
-
-
 def load_ivf_pq_model(spark: SparkSession, path: str):
     """(centroids, codebooks) ndarrays from the stored model tables —
     a bounded driver collect (n_cells + m·k_codes rows of short
@@ -153,14 +125,16 @@ def load_ivf_pq_model(spark: SparkSession, path: str):
     see :func:`~trisk_datawrangle_spark.llm.lsh_index.
     publish_index_versioned`) — it resolves to the current version.
     The loaded model is memoized per (application, resolved version)
-    — see ``_MODEL_MEMO``."""
+    in lsh_index's serving memo: a published version is immutable
+    and the pointer resolves per call, so a retrain-and-swap lands on
+    a NEW resolved path and misses the memo."""
     import concurrent.futures
 
     import numpy as np
 
     path = resolve_index_path(spark, path)
-    key = (spark.sparkContext.applicationId, path)
-    hit = _MODEL_MEMO.get(key)
+    key = (spark.sparkContext.applicationId, path, "model")
+    hit = _memo_get(key)
     if hit is not None:
         return hit
     meta = read_index_meta(spark, path)
@@ -185,14 +159,10 @@ def load_ivf_pq_model(spark: SparkSession, path: str):
         books[r["j"], r["code"]] = r["c"]
     # the memo hands the SAME ndarrays to every caller — freeze them
     # so an in-place mutation cannot silently poison the process-wide
-    # cache (r13, advice item); bound the memo (stale versions of
-    # long-lived processes evict oldest-first)
+    # cache
     cent.setflags(write=False)
     books.setflags(write=False)
-    while len(_MODEL_MEMO) >= 64:
-        del _MODEL_MEMO[next(iter(_MODEL_MEMO))]
-    _MODEL_MEMO[key] = (cent, books)
-    return cent, books
+    return _memo_put(key, (cent, books))
 
 
 def ivf_pq_index_topk(

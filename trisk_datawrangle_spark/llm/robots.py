@@ -3,7 +3,8 @@ politeness gate every crawl scheduler runs between link discovery
 (x50's frontier) and the fetch queue: a URL only enters the queue if
 the origin host's robots.txt allows it for our product token.
 
-Stdlib-only, spec-driven (RFC 9309, "Robots Exclusion Protocol"):
+The parser is stdlib-only and spec-driven (RFC 9309, "Robots
+Exclusion Protocol"):
 
 * **Group selection** (§2.2.1): a group is one or more ``User-agent``
   lines followed by rules; several agent lines may stack onto the
@@ -36,19 +37,24 @@ Stdlib-only, spec-driven (RFC 9309, "Robots Exclusion Protocol"):
   (most conservative politeness). See :func:`parse_robots_full`.
 
 The parser returns plain ``(verb, path)`` rules so the Spark side
-stays declarative: rules become a tiny per-host DataFrame (a
-broadcast-joinable dimension — a robots file is ~KB and one per
-host, dwarfed by any frontier), the prefix/wildcard match compiles
-to an anchored regex evaluated JVM-side (``regexp_like`` with a
-per-row pattern), and the winner is one window argmax. Nothing in
-the hot path is Python: at 100 TB the frontier×rules join is a
-broadcast hash join keyed on host, and the argmax a partial
-aggregate over (url, rule) candidates.
+stays declarative: :func:`robots_rules` adds each rule's specificity
+and anchored regex, a caller turns them into a tiny per-host rules
+DataFrame (a robots file is ~KB and one per host, dwarfed by any
+frontier), and :func:`robots_verdict` gates a frontier against it:
+a broadcast hash join on host, a per-row ``regexp_like`` against the
+rule's regex, and a ``max(struct(...))`` aggregate per URL key that
+picks the winning rule. Nothing in the match path is Python, and the
+aggregate is map-side combinable, so at crawl scale the gate is one
+broadcast join plus one partial aggregate over (url, rule)
+candidates.
 """
 
 from __future__ import annotations
 
 import re
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 #: Regex metacharacters to escape when translating a rule path to a
 #: regex. ``*`` is the RFC's own wildcard and is handled structurally,
@@ -189,3 +195,46 @@ def robots_rules(body: str, agent: str) -> list[tuple[str, str, int, str]]:
         (verb, path, len(path), rule_regex(path))
         for verb, path in parse_robots(body, agent)
     ]
+
+
+def robots_verdict(
+    frontier: DataFrame, rules: DataFrame, keys: list[str]
+) -> DataFrame:
+    """The robots gate over a crawl frontier: ``frontier`` plus
+    ``allowed`` (boolean) and ``rule`` (the winning rule's path as
+    written, ``''`` when no rule matched).
+
+    ``frontier`` carries the URL's host key ``h`` and its
+    path-and-query ``path``; ``keys`` identify one frontier URL (they
+    must be unique per row). ``rules`` holds one row per (host, rule)
+    with the columns ``h``, ``verb``, ``pattern``, ``plen`` and ``rx``
+    -- the :func:`robots_rules` tuples keyed by host.
+
+    Rules join on host as a broadcast, match with ``regexp_like(path,
+    rx)``, and the winner per URL is ``max(struct(plen, allow_pref,
+    pattern, verb))``: the longest rule wins, ``Allow`` wins a length
+    tie (RFC 9309 §2.2.2), and the pattern breaks any remaining tie
+    deterministically. URLs no rule matches are allowed with
+    ``rule = ''``; the winners left-join back on ``keys``."""
+    matched = (
+        frontier.select(*keys, "h", "path")
+        .join(F.broadcast(rules), "h")
+        .where(F.regexp_like(F.col("path"), F.col("rx")))
+    )
+    best = matched.groupBy(*keys).agg(
+        F.max(
+            F.struct(
+                F.col("plen"),
+                (F.col("verb") == "allow").cast("int").alias("allow_pref"),
+                F.col("pattern"),
+                F.col("verb"),
+            )
+        ).alias("__w")
+    )
+    return frontier.join(best, keys, "left").select(
+        *frontier.columns,
+        (F.coalesce(F.col("__w.verb"), F.lit("allow")) == "allow").alias(
+            "allowed"
+        ),
+        F.coalesce(F.col("__w.pattern"), F.lit("")).alias("rule"),
+    )
