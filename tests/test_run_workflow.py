@@ -5,11 +5,15 @@ and check the canonical outputs land with the dbml-contract schemas.
 
 from __future__ import annotations
 
+import os
 import random
+import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from trisk_datawrangle_spark.operators.persist import stage_boundary
 from trisk_datawrangle_spark.run_workflow import ALL_STAGES, run_stage
 
 YEARS = (2022, 2023, 2024, 2025)
@@ -207,3 +211,194 @@ def test_cli_arg_validation():
 
     with pytest.raises(SystemExit):
         main(["--input-dir", "/x", "--output-dir", "/y", "--stages", "nope"])
+
+
+# ------------------------------------------------------------------ #
+# stage boundaries                                                    #
+# ------------------------------------------------------------------ #
+
+#: Executed-plan size bound for every plan a workflow stage runs: each
+#: frame handed to a stage boundary, and the stage output. Without the
+#: boundaries the abcd and financial plans replan the scan→melt→join
+#: chain at every reference and run to over 100 KB; with them the
+#: largest is about 14 KB.
+_STAGE_PLAN_BOUND = 24 * 1024
+
+_FILESCAN_RX = re.compile(r"FileScan \w+ .*?Location: [^[\n]*\[([^\]]*)\]")
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _boundary_plans(monkeypatch, module, build, cached=()):
+    """Run ``build()`` with ``module.stage_boundary`` spied on; return
+    the executed plan of every frame handed to a boundary, then that of
+    the output. Calls whose 0-based index is in ``cached`` get
+    ``.cache()`` instead of a boundary (the positive control)."""
+    plans, caches = [], []
+
+    def boundary(df):
+        if len(plans) + len(caches) in cached:
+            caches.append(df.cache())
+            return caches[-1]
+        plans.append(_physical(df))
+        return stage_boundary(df)
+
+    monkeypatch.setattr(module, "stage_boundary", boundary)
+    try:
+        plans.append(_physical(build()))
+    finally:
+        for df in caches:
+            df.unpersist()
+    return plans
+
+
+def _shape_faults(plans) -> list[str]:
+    """Every plan stays under the size bound, and the output (the last
+    plan) scans each source at most once. A plan that feeds the first
+    boundary may read its source twice by design (a union of filtered
+    copies, a spine joined back onto its data); past the boundaries,
+    no plan reaches back to the sources more than once."""
+    faults = [
+        f"plan {i}: {len(plan)} bytes"
+        for i, plan in enumerate(plans)
+        if len(plan) >= _STAGE_PLAN_BOUND
+    ]
+    scans = Counter(_FILESCAN_RX.findall(plans[-1]))
+    faults += [f"output: {path} scanned {n}x" for path, n in scans.items() if n > 1]
+    return faults
+
+
+def _abcd(spark, inp):
+    from trisk_datawrangle_spark.plans.abcd import prepare_abcd_data
+
+    return prepare_abcd_data(
+        spark.read.parquet(f"{inp}/company_activities.parquet"),
+        spark.read.parquet(f"{inp}/company_emissions.parquet"),
+        start_year=2022,
+        time_horizon=3,
+    )
+
+
+def test_stage_plans_scan_each_source_once(
+    spark, staged_dirs, tmp_path, monkeypatch
+):
+    from trisk_datawrangle_spark.plans import (
+        abcd,
+        capacity_factors,
+        financial,
+        prices,
+        scenarios,
+    )
+
+    inp, _ = staged_dirs
+    out = str(tmp_path)
+    run_stage(spark, "abcd", inp, out, start_year=2022, time_horizon=3)
+
+    def read(base, name):
+        return spark.read.parquet(f"{base}/{name}.parquet")
+
+    builds = {
+        abcd: lambda: _abcd(spark, inp),
+        financial: lambda: financial.prepare_financial_data(
+            read(inp, "eikon_data"),
+            read(out, "abcd_stress_test_input").select(
+                "company_id", "ald_sector"
+            ),
+            read(inp, "ownership_tree"),
+        ),
+        scenarios: lambda: scenarios.prepare_scenarios_analysis_input(
+            {"all": read(inp, "scenario_analysis_input")},
+            read(inp, "sector_tech_lookup"),
+            ["WEO_STEPS"],
+            ["WEO_NZE"],
+            start_year=2022,
+        ),
+        capacity_factors: lambda: capacity_factors.prepare_capacity_factors(
+            read(inp, "capacity_factors_raw")
+        ),
+        prices: lambda: prices.prepare_price_data_long(
+            read(inp, "price_raw"), horizon_end=2052
+        ),
+    }
+    for module, build in builds.items():
+        plans = _boundary_plans(monkeypatch, module, build)
+        assert len(plans) > 1, module.__name__
+        assert any(_FILESCAN_RX.search(p) for p in plans), module.__name__
+        assert not _shape_faults(plans), (module.__name__, _shape_faults(plans))
+
+
+def test_stage_plan_guard_catches_cached_rollup(
+    spark, staged_dirs, monkeypatch
+):
+    """Positive control: with abcd's first boundary (``rolled``) turned
+    back into ``.cache()``, the plan that materializes ``with_ef``
+    rescans both inputs at every reference Spark does not substitute
+    the cached relation into."""
+    from trisk_datawrangle_spark.plans import abcd
+
+    inp, _ = staged_dirs
+    plans = _boundary_plans(
+        monkeypatch, abcd, lambda: _abcd(spark, inp), cached={0}
+    )
+    assert _shape_faults(plans)
+
+
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _spy_peak(monkeypatch, spark, module) -> list[set[int]]:
+    """Record the persistent RDD ids after each boundary ``module``
+    materializes."""
+    peaks = []
+
+    def boundary(df):
+        out = stage_boundary(df)
+        peaks.append(_persistent_ids(spark))
+        return out
+
+    monkeypatch.setattr(module, "stage_boundary", boundary)
+    return peaks
+
+
+def test_run_stage_releases_its_boundaries(
+    spark, staged_dirs, tmp_path, monkeypatch
+):
+    """Every persistent RDD the stage created is gone once it returns.
+    Compared by id, not by count: the JVM may collect an unrelated
+    checkpoint left by an earlier caller while the stage runs."""
+    from trisk_datawrangle_spark.plans import abcd
+
+    inp, _ = staged_dirs
+    peaks = _spy_peak(monkeypatch, spark, abcd)
+    before = _persistent_ids(spark)
+    run_stage(spark, "abcd", inp, str(tmp_path), 2022, 3)
+    assert any(ids - before for ids in peaks)
+    assert not _persistent_ids(spark) - before
+
+
+def test_run_stage_releases_its_boundaries_when_it_raises(
+    spark, staged_dirs, tmp_path, monkeypatch
+):
+    """Q3: a scenario missing from ``scenario_types`` stays
+    unclassified, and the stage raises after its boundary exists."""
+    from trisk_datawrangle_spark.operators.quality import DataQualityError
+    from trisk_datawrangle_spark.plans import scenarios
+
+    inp, _ = staged_dirs
+    bad = tmp_path / "in"
+    bad.mkdir()
+    for name in ("scenario_analysis_input", "sector_tech_lookup"):
+        os.symlink(f"{inp}/{name}.parquet", bad / f"{name}.parquet")
+    spark.createDataFrame(
+        [("WEO_STEPS", "baseline")], "scenario string, scenario_type string"
+    ).write.parquet(str(bad / "scenario_types.parquet"))
+
+    peaks = _spy_peak(monkeypatch, spark, scenarios)
+    before = _persistent_ids(spark)
+    with pytest.raises(DataQualityError, match="scenario_type"):
+        run_stage(spark, "scenarios", str(bad), str(tmp_path / "out"), 2022, 3)
+    assert any(ids - before for ids in peaks)
+    assert not _persistent_ids(spark) - before

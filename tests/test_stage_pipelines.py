@@ -95,6 +95,25 @@ def test_scenarios_fair_share(scenarios_out):
     assert ren[2025][1] == pytest.approx(100.0 / 150.0)
 
 
+def test_market_share_base_ignores_row_order(spark):
+    """Several rows for a series' first year: the base is the smallest
+    value (NULLs last), whichever row arrives first."""
+    from trisk_datawrangle_spark.operators.windows import (
+        add_market_share_columns,
+    )
+
+    rows = [("a", 2020, None), ("a", 2020, 4.0), ("a", 2020, 2.0),
+            ("a", 2021, 3.0)]
+    for order in (rows, rows[::-1]):
+        df = spark.createDataFrame(
+            order, "k string, year int, value double"
+        ).coalesce(1)
+        out = add_market_share_columns(df, ["k"], ["k"])
+        assert [r["tmsr"] for r in out.filter("year = 2021").collect()] == [
+            pytest.approx(0.5)
+        ]
+
+
 def test_scenarios_incomplete_sector_dropped(scenarios_out):
     # Oil&Gas misses Gas → entire sector removed for that group (Q8)
     assert scenarios_out.filter(F.col("ald_sector") == "Oil&Gas").count() == 0

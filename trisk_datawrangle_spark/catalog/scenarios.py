@@ -518,7 +518,7 @@ shares AS (
     FROM tot
     WINDOW w AS (
         PARTITION BY scenario_geography, scenario, ald_sector, units,
-        technology ORDER BY year
+        technology ORDER BY year, value NULLS LAST
         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 ),
 final AS (
@@ -695,7 +695,7 @@ shares AS (
     FROM tot
     WINDOW w AS (
         PARTITION BY scenario_geography, scenario, ald_sector, units,
-        technology ORDER BY year
+        technology ORDER BY year, value NULLS LAST
         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 ),
 cloned AS (
@@ -878,7 +878,7 @@ staged AS (
 shares AS (
     SELECT *, FIRST_VALUE(value) OVER (
         PARTITION BY scenario, sector, scenario_geography, technology
-        ORDER BY year
+        ORDER BY year, value NULLS LAST
         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
         AS first_v
     FROM staged
@@ -1704,7 +1704,7 @@ shares AS (
         FIRST_VALUE(sector_total) OVER w AS first_tot
     FROM tot
     WINDOW w AS (PARTITION BY scenario, scenario_geography, ald_sector,
-        technology ORDER BY year
+        technology ORDER BY year, value NULLS LAST
         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 ),
 scenarios_out AS (
@@ -2282,6 +2282,7 @@ def w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolating percentile vs DuckDB MEDIAN); one out-of-range
     net-profit-margin exercises the F12 gate; the zero-production
     first year exercises the P9 gate after asset ids are assigned."""
+    from trisk_datawrangle_spark.operators.persist import stage_boundary
     from trisk_datawrangle_spark.plans.abcd import (
         first_year_positive,
         prepare_abcd_data,
@@ -2339,19 +2340,19 @@ def w1(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # localCheckpoint, not cache: the financial chain and the assembly
-    # both build ON TOP of this plan, and Catalyst re-analyzes the
-    # embedded subtree at every operator — the composed DAG cost ~35s
-    # of pure driver-side analysis. Cutting the lineage here mirrors
-    # what run_workflow does between stages (parquet write/read) and
-    # collapses the analysis to shallow plans. The frame is
-    # series-grain (tiny), so materializing it is free.
-    abcd = first_year_positive(
-        prepare_abcd_data(
-            wide(False), wide(True), start_year=2025, time_horizon=2
-        ),
-        ["company_id", "ald_business_unit", "ald_production_unit"],
-    ).localCheckpoint()
+    # stage boundary, as run_workflow's parquet handoff between the
+    # abcd and financial stages: the financial chain and the assembly
+    # both build on top of this frame, and without the cut Catalyst
+    # re-analyzes the embedded subtree at every operator. The frame
+    # is series-grain (tiny), so materializing it is free.
+    abcd = stage_boundary(
+        first_year_positive(
+            prepare_abcd_data(
+                wide(False), wide(True), start_year=2025, time_horizon=2
+            ),
+            ["company_id", "ald_business_unit", "ald_production_unit"],
+        )
+    )
 
     eikon = (
         n.select(
@@ -2394,7 +2395,7 @@ def w1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ownership_level",
     )
     companies = abcd.select("company_id", "ald_sector").distinct()
-    fin = prepare_financial_data(eikon, companies, tree).localCheckpoint()
+    fin = stage_boundary(prepare_financial_data(eikon, companies, tree))
 
     out = assemble_assets_data(abcd, fin)
     return out.select(

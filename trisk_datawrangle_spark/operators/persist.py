@@ -11,8 +11,17 @@ checkpoints per entry (stress.py, bench.py) or per iteration
 late: the sf10 components probe OOMed an 8 GiB heap on storage pinned
 by checkpoints of *earlier, already-finished* catalog entries.
 
-Two tools close the gap:
+Three tools close the gap:
 
+* :func:`stage_boundary` — the one stage-boundary primitive for the
+  workflow plans: an eager ``localCheckpoint`` at a point a frame is
+  read more than once, so every later reference reads the stored
+  blocks instead of planning the whole upstream subtree again.
+  ``.cache()`` is not a boundary: in the workflow plans Spark
+  substituted the cached relation at one reference of each cached
+  frame and planned the subtree again at the others. Callers that own
+  a stage wrap it in :func:`released_on_exit`, which frees the
+  boundaries' storage when the stage ends.
 * :func:`tracked_local_checkpoint` — checkpoint a frame and return
   the ids of the persistent RDDs the call created (snapshot-diff of
   ``SparkContext.getPersistentRDDs``), so the caller can free them
@@ -31,6 +40,9 @@ Two tools close the gap:
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
@@ -52,6 +64,30 @@ def tracked_local_checkpoint(
     before = _persistent_ids(spark)
     out = df.localCheckpoint(eager=True, storageLevel=storage_level)
     return out, _persistent_ids(spark) - before
+
+
+def stage_boundary(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and return a frame whose plan is a scan
+    of the stored blocks: an eager ``localCheckpoint`` that truncates
+    lineage. Place it where a frame is referenced more than once (a
+    self-join, an aggregate joined back, a union of filtered copies).
+    The storage stays until the JVM collects the frame or the owning
+    scope frees it (:func:`released_on_exit`); the frame is unusable
+    after that."""
+    return df.localCheckpoint(eager=True)
+
+
+@contextmanager
+def released_on_exit(spark: SparkSession) -> Iterator[None]:
+    """Free every persistent RDD created inside the block when it
+    exits, whether it returns or raises (the same snapshot diff as
+    :func:`tracked_local_checkpoint`). Frames checkpointed inside the
+    block must not be used after it."""
+    before = _persistent_ids(spark)
+    try:
+        yield
+    finally:
+        unpersist_ids(spark, _persistent_ids(spark) - before)
 
 
 def unpersist_ids(spark: SparkSession, ids: frozenset[int]) -> None:

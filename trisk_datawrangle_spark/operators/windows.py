@@ -54,10 +54,12 @@ def add_market_share_columns(
     same delta by the *sector total* in the first year. Two window
     partitionings, one logical pass; Catalyst plans both windows off
     a single sort-shuffle when ``sector_group_cols`` is a prefix of
-    ``tech_group_cols``."""
+    ``tech_group_cols``. When a series carries several rows for its
+    first ``x_col`` value, the base is the smallest of them (NULLs
+    last), not whichever row a shuffle delivered first."""
     tech = list(tech_group_cols)
     sector = list(sector_group_cols)
-    w_tech = _full_frame(tech, [x_col])
+    w_tech = _full_frame(tech, [x_col, F.col(value_col).asc_nulls_last()])
     w_sector_year = Window.partitionBy(*sector, x_col)
     first_v = F.first(value_col).over(w_tech)
     df = df.withColumn("__sector_total_by_year", F.sum(value_col).over(w_sector_year))

@@ -8,12 +8,18 @@ activity/emission tables. Output: the canonical long
 (company, sector, business_unit, year) production + emission-factor
 table (outputs_structure.dbml:24-37).
 
-Scale design: one shuffle on the company/sector/business-unit keys
-covers dedup-aggregation, the spine join and every window that
-follows; the emissions⋈production pairing is a full outer join on
-those same keys (AQE keeps it co-partitioned). Year melt is a
-projection (native unpivot, no shuffle); the EF-imputation lookup is
-a tiny per-(sector, unit) aggregate broadcast back.
+Scale design: the emissions⋈production pairing is a full outer join
+on the company/sector/business-unit keys (AQE keeps it
+co-partitioned); year melt is a projection (native unpivot, no
+shuffle); the EF-imputation lookup is a tiny per-(sector, unit)
+aggregate broadcast back. Two stage boundaries
+(``operators.persist.stage_boundary``) cut the plan at the series-grain
+frames that are read more than once: the location rollup and the
+frame carrying emission factors. Each input is scanned once, and the
+stage output's executed plan (after ``first_year_positive``) is about
+13 KB with 8 Exchanges on the 600-company benchmark input (234 KB and
+66 Exchanges with ``.cache()`` at those points: Spark substituted the
+cached relation at only one reference and replanned the rest).
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.functions.scalars import recode, safe_div
 from trisk_datawrangle_spark.operators.interpolate import fill_locf, na_approx
+from trisk_datawrangle_spark.operators.persist import stage_boundary
 from trisk_datawrangle_spark.operators.reshape import melt_year_columns
 from trisk_datawrangle_spark.operators.spine import complete_spine
 from trisk_datawrangle_spark.operators.windows import with_asset_id
@@ -135,9 +142,10 @@ def hq_company_ids(
     """Distinct ultimate-parent company ids headquartered in
     ``country_filter`` — the HQ dimension both the production and the
     emissions branch semi-join. Callers applying the filter to
-    several frames should build this ONCE (and cache it) and pass it
-    via ``filter_countries_coverage(hqs=...)`` so the distinct
-    aggregate and broadcast are not replanned per frame."""
+    several frames should build this ONCE (behind a
+    ``stage_boundary``) and pass it via
+    ``filter_countries_coverage(hqs=...)`` so the distinct aggregate
+    and broadcast are not replanned per frame."""
     return (
         company_informations.filter(
             F.col("ald_location").isin(*list(country_filter))
@@ -173,12 +181,13 @@ def prepare_abcd_data(
     emis = prepare_asset_impact_data(emissions_wide, "plan_emissions").filter(
         F.col("activity_unit").isin("tCO2", "tCO2e")
     )
-    # the HQ dimension is identical for both branches — build (and
-    # cache) it once instead of replanning the distinct + broadcast
-    # per frame
+    # the HQ dimension is identical for both branches — materialize
+    # it once instead of replanning the distinct + broadcast per frame
     hqs = None
     if filter_hqs and country_filter and company_informations is not None:
-        hqs = hq_company_ids(company_informations, country_filter).cache()
+        hqs = stage_boundary(
+            hq_company_ids(company_informations, country_filter)
+        )
     prod = filter_countries_coverage(
         prod, company_informations, country_filter, filter_hqs,
         filter_assets, hqs=hqs,
@@ -206,14 +215,12 @@ def prepare_abcd_data(
     # drop NULL locations, roll production/emissions up over locations
     # (prepare_abcd_stress_test_input.R:369-371, :246-259); the HQ
     # country (first location in key order) is kept as country_iso2.
-    # stage boundary: cached — the spine completion reuses this frame
-    # twice (bounds aggregate + join back) and everything downstream
-    # hangs off it; uncached, the physical plan replicates the whole
-    # scan→melt→aggregate→outer-join subtree once per reuse (~9 scans
-    # of each input observed). After the rollup the frame is
-    # series-grain (companies × business units × years) — orders of
+    # Stage boundary: the spine completion reads this frame twice
+    # (bounds aggregate + join back) and everything downstream hangs
+    # off it, so each input is scanned once, here. The frame is
+    # series-grain (companies × business units × years), orders of
     # magnitude smaller than the raw asset-level input.
-    rolled = (
+    rolled = stage_boundary(
         merged.filter(F.col("ald_location").isNotNull())
         .groupBy(*KEYS, "ald_production_unit", "year")
         .agg(
@@ -226,7 +233,6 @@ def prepare_abcd_data(
             # would flip units between runs
             F.min("emissions_unit").alias("emissions_unit"),
         )
-        .cache()
     )
 
     # dense year spine over the model horizon (T1 fixed bounds,
@@ -252,16 +258,21 @@ def prepare_abcd_data(
     # NULL (R Inf/NaN re-expressed, SURVEY.md §7.3.3), then missing
     # factors are mean-imputed per (sector, business_unit)
     # (:130-169) via a tiny broadcast lookup.
-    # second boundary: the EF-imputation lookup, the dead-series
-    # filter and the asset-id numbering each re-read this frame
-    with_ef = dense.withColumn(
-        "plan_emission_factor", safe_div("plan_emissions", "plan_tech_prod")
-    ).withColumn(
-        "emissions_factor_unit",
-        F.concat_ws(
-            "/", F.coalesce("emissions_unit", F.lit("tCO2")), "ald_production_unit"
-        ),
-    ).cache()
+    # Stage boundary: the EF-imputation lookup, the dead-series filter
+    # and the asset-id numbering each read this frame.
+    with_ef = stage_boundary(
+        dense.withColumn(
+            "plan_emission_factor",
+            safe_div("plan_emissions", "plan_tech_prod"),
+        ).withColumn(
+            "emissions_factor_unit",
+            F.concat_ws(
+                "/",
+                F.coalesce("emissions_unit", F.lit("tCO2")),
+                "ald_production_unit",
+            ),
+        )
+    )
     avg_ef = with_ef.groupBy("ald_sector", "ald_business_unit").agg(
         F.avg("plan_emission_factor").alias("__avg_ef")
     )

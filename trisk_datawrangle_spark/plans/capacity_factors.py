@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.functions.scalars import recode, safe_div
 from trisk_datawrangle_spark.operators.interpolate import na_approx
+from trisk_datawrangle_spark.operators.persist import stage_boundary
 from trisk_datawrangle_spark.operators.quality import assert_bounds
 from trisk_datawrangle_spark.operators.reshape import melt_year_columns
 from trisk_datawrangle_spark.operators.setops import clone_recode
@@ -82,8 +83,7 @@ def prepare_capacity_factors(
     # zero/NULL policy (SURVEY.md §7.3.3): year absent on both sides →
     # NULL (interpolated later); capacity 0-or-NULL with generation
     # present → 0 (the reference's NaN→0 clamp); else clamp into [0,1]
-    cf = wide.withColumn(
-        "capacity_factor",
+    factor = (
         F.when(
             F.col("Generation").isNull() & F.col("Capacity").isNull(),
             F.lit(None).cast("double"),
@@ -99,8 +99,13 @@ def prepare_capacity_factors(
                 ),
                 F.lit(1.0),
             )
-        ),
-    ).select(*SERIES_KEYS, "year", "capacity_factor")
+        )
+    )
+    # Stage boundary: the spine completion reads this frame twice
+    # (bounds aggregate + join back).
+    cf = stage_boundary(
+        wide.select(*SERIES_KEYS, "year", factor.alias("capacity_factor"))
+    )
     # T1 + W8: dense yearly spine, interior interpolation, kept edges
     # half-specified bounds are legal: complete_spine's fixed mode
     # derives the missing side from the data (previously start_year
@@ -111,10 +116,11 @@ def prepare_capacity_factors(
         else {"bounds": "group"}
     )
     dense = complete_spine(cf, SERIES_KEYS, "year", **bounds)
-    interp = na_approx(
-        dense, SERIES_KEYS, "year", "capacity_factor", na_rm=True
+    # Stage boundary: the technology clones union this output with
+    # filtered copies of itself.
+    return stage_boundary(
+        na_approx(dense, SERIES_KEYS, "year", "capacity_factor", na_rm=True)
     )
-    return interp
 
 
 def clone_missing_technologies(

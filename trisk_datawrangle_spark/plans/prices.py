@@ -27,6 +27,7 @@ from trisk_datawrangle_spark.operators.interpolate import (
     lm_extrapolate,
     na_approx,
 )
+from trisk_datawrangle_spark.operators.persist import stage_boundary
 from trisk_datawrangle_spark.operators.reshape import melt_year_columns
 from trisk_datawrangle_spark.operators.setops import union_by_name
 from trisk_datawrangle_spark.operators.spine import complete_spine
@@ -133,7 +134,9 @@ def prepare_price_data_long(
     tech_keys = ["technology"] if "technology" in long.columns else []
     if tech_keys:
         long = convert_mwh_units(long)
-    long = add_global_mean_rows(long, extra_keys=tech_keys)
+    # Stage boundary: the spine completion reads this frame twice
+    # (bounds aggregate + join back).
+    long = stage_boundary(add_global_mean_rows(long, extra_keys=tech_keys))
     keys = [c for c in PRICE_KEYS if c in long.columns] + tech_keys
     if horizon_end is not None:
         # lo comes from the data lazily (half-specified fixed bounds);
@@ -144,7 +147,11 @@ def prepare_price_data_long(
         )
     else:
         dense = complete_spine(long, keys, "year", bounds="group")
-    interp = na_approx(dense, keys, "year", "price", na_rm=False)
+    # Stage boundary: the OLS extension fits per-group coefficients
+    # from this frame and joins them back onto it.
+    interp = stage_boundary(
+        na_approx(dense, keys, "year", "price", na_rm=False)
+    )
     extended = lm_extrapolate(
         interp, keys, "year", "price", exact_scale=None
     )

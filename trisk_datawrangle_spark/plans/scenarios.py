@@ -11,8 +11,11 @@ incomplete-sector removal) → union of sources → scenario-type
 tagging.
 
 Everything is one lazy DAG per source; the per-source frames are
-unioned by name (U1) so Catalyst sees the whole pipeline (the
-reference materializes CSV between every stage).
+unioned by name (U1) so Catalyst sees every source's chain (the
+reference materializes CSV between every stage). One stage boundary
+(``operators.persist.stage_boundary``) after the cross-source dedup
+cuts the plan before the sector-completeness check reads the frame
+again.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.operators.interpolate import interpolate_yearly
+from trisk_datawrangle_spark.operators.persist import stage_boundary
 from trisk_datawrangle_spark.operators.quality import incomplete_groups
 from trisk_datawrangle_spark.functions.scalars import any_null
 
@@ -177,7 +181,9 @@ def prepare_scenarios_analysis_input(
         "year",
     ]
     w = Window.partitionBy(*dedup_keys).orderBy("__source_rank")
-    merged = (
+    # Stage boundary: the sector-completeness check aggregates this
+    # frame and anti-joins it back.
+    merged = stage_boundary(
         drop_na_geographies(merged)
         .withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") == 1)

@@ -37,7 +37,6 @@ import argparse
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.session import get_spark
 
@@ -71,6 +70,26 @@ def run_stage(
     start_year: int,
     time_horizon: int,
 ) -> None:
+    """Run one stage: read its inputs, run its plan, write its outputs.
+    The storage of every stage boundary the plan materialized
+    (``operators.persist.stage_boundary``) is freed when the stage
+    returns or raises, so it does not pile up across stages."""
+    from trisk_datawrangle_spark.operators.persist import released_on_exit
+
+    with released_on_exit(spark):
+        _run_stage(
+            spark, stage, input_dir, output_dir, start_year, time_horizon
+        )
+
+
+def _run_stage(
+    spark: SparkSession,
+    stage: str,
+    input_dir: str,
+    output_dir: str,
+    start_year: int,
+    time_horizon: int,
+) -> None:
     if stage == "scenarios":
         from trisk_datawrangle_spark.plans.scenarios import (
             assert_all_classified,
@@ -79,15 +98,15 @@ def run_stage(
 
         raw = _read(spark, input_dir, "scenario_analysis_input")
         lookup = _read(spark, input_dir, "sector_tech_lookup")
-        types = _read(spark, input_dir, "scenario_types")
+        types = (
+            _read(spark, input_dir, "scenario_types")
+            .select("scenario", "scenario_type")
+            .collect()
+        )
         baseline = [
-            r["scenario"]
-            for r in types.filter(F.col("scenario_type") == "baseline").collect()
+            r["scenario"] for r in types if r["scenario_type"] == "baseline"
         ]
-        shock = [
-            r["scenario"]
-            for r in types.filter(F.col("scenario_type") == "shock").collect()
-        ]
+        shock = [r["scenario"] for r in types if r["scenario_type"] == "shock"]
         out = prepare_scenarios_analysis_input(
             {"all": raw}, lookup, baseline, shock, start_year=start_year
         )
